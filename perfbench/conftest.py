@@ -1,0 +1,11 @@
+"""Make the benchmark's flat modules importable by its tests:
+
+    python3 -m pytest perfbench -q
+"""
+
+import os
+import sys
+
+HERE = os.path.dirname(os.path.abspath(__file__))
+if HERE not in sys.path:
+    sys.path.insert(0, HERE)
